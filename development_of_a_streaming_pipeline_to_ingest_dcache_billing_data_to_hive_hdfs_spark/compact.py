@@ -33,6 +33,14 @@ from pyspark.sql import functions as F
 
 from .fs import get_filesystem
 from .schema import DEFAULT_PARTITION_NAME, PARTITION_FIELD
+from .sink import (
+    LEDGER_FILE,
+    find_lifecycle_file,
+    ledger_ids,
+    lifecycle_dirs,
+    metrics_files,
+    read_json,
+)
 
 DEFAULT_TARGET_BYTES = 512 * 1024 * 1024
 
@@ -533,55 +541,41 @@ def _record_compacted_as_of(path: str, fs) -> int | None:
     value — the pre-round-7 format — did exactly that.)"""
     import json as _json
 
+    found = find_lifecycle_file(path, LEDGER_FILE, fs)
+    if found is None or not found[1]:
+        return None
+    level, committed = found
     table = os.path.basename(path.rstrip("/"))
-    for level, base in enumerate(
-        (path.rstrip("/"), os.path.dirname(path.rstrip("/")))
-    ):
-        ledger = os.path.join(base, "_ledger.json")
-        try:
-            committed = _json.loads(fs.read_text(ledger))
-        except Exception:  # noqa: BLE001 — no ledger at this level
-            continue
-        if not committed:
-            return None
-        marker = os.path.join(base, COMPACTED_AS_OF_FILE)
-        try:
-            doc = _json.loads(fs.read_text(marker))
-        except Exception:  # noqa: BLE001 — first compaction
-            doc = {}
-        if level == 0:
-            prev = int(doc.get("compacted_as_of", -1))
-        else:
-            prev = max(
-                int(
-                    doc.get("tables", {})
-                    .get(table, {})
-                    .get("compacted_as_of", -1)
-                ),
-                # legacy flat warehouse-scope value: fold it into this
-                # table's entry (it was recorded by compacting SOME
-                # table here, monotonicity must survive the migration)
-                int(doc.get("compacted_as_of", -1)),
-            )
-        val = max(prev, max(int(b) for b in committed))
-        stamp = {
-            "compacted_as_of": val,
-            "recorded_at": dt.datetime.now(dt.timezone.utc).isoformat(),
-        }
-        if level == 0:
-            doc = stamp
-        else:
-            # Keep any legacy flat warehouse-scope value IN PLACE: it
-            # was recorded by compacting SOME table here, so a sibling
-            # table compacted under the old format still needs it as
-            # its floor (the reader takes max(tables[t], flat)).
-            # Popping it would silently reset such siblings to -1 and
-            # let read_table_as_of serve rows from below their real
-            # compaction point.
-            doc.setdefault("tables", {})[table] = stamp
-        fs.write_text_atomic(marker, _json.dumps(doc, sort_keys=True))
-        return val
-    return None
+    marker = os.path.join(lifecycle_dirs(path)[level], COMPACTED_AS_OF_FILE)
+    doc = read_json(marker, fs) or {}  # absent before the first compaction
+    if level == 0:
+        prev = int(doc.get("compacted_as_of", -1))
+    else:
+        prev = max(
+            int(doc.get("tables", {}).get(table, {}).get("compacted_as_of", -1)),
+            # legacy flat warehouse-scope value: fold it into this
+            # table's entry (it was recorded by compacting SOME
+            # table here, monotonicity must survive the migration)
+            int(doc.get("compacted_as_of", -1)),
+        )
+    val = max(prev, max(int(b) for b in committed))
+    stamp = {
+        "compacted_as_of": val,
+        "recorded_at": dt.datetime.now(dt.timezone.utc).isoformat(),
+    }
+    if level == 0:
+        doc = stamp
+    else:
+        # Keep any legacy flat warehouse-scope value IN PLACE: it
+        # was recorded by compacting SOME table here, so a sibling
+        # table compacted under the old format still needs it as
+        # its floor (the reader takes max(tables[t], flat)).
+        # Popping it would silently reset such siblings to -1 and
+        # let read_table_as_of serve rows from below their real
+        # compaction point.
+        doc.setdefault("tables", {})[table] = stamp
+    fs.write_text_atomic(marker, _json.dumps(doc, sort_keys=True))
+    return val
 
 
 def expire_snapshots(
@@ -620,12 +614,7 @@ def expire_snapshots(
     import json as _json
 
     fs = fs or get_filesystem(warehouse)
-    try:
-        committed = sorted(
-            _json.loads(fs.read_text(os.path.join(warehouse, "_ledger.json")))
-        )
-    except Exception:
-        committed = []
+    committed = sorted(ledger_ids(warehouse, fs))
     if up_to_batch is None:
         if not committed:
             raise ValueError(
@@ -642,24 +631,17 @@ def expire_snapshots(
                 "the CURRENT table state"
             )
     horizon_path = os.path.join(warehouse, SNAPSHOT_HORIZON_FILE)
-    prev = 0
-    try:
-        prev = int(_json.loads(fs.read_text(horizon_path))["horizon"])
-    except Exception:
-        pass
+    doc = read_json(horizon_path, fs)
+    prev = int(doc["horizon"]) if doc else 0
     if horizon < prev:
         raise ValueError(
             f"expire_snapshots: horizon is monotonic — refusing to lower "
             f"it from {prev} to {horizon} (the expired metadata is gone)"
         )
     removed = 0
-    metrics_dir = os.path.join(warehouse, "_metrics")
-    import re as _re
-
-    for name, is_dir in fs.list_entries(metrics_dir):
-        m = _re.fullmatch(r"batch-(\d+)\.json", name)
-        if not is_dir and m and int(m.group(1)) < horizon:
-            fs.delete(os.path.join(metrics_dir, name))
+    for bid, mpath in metrics_files(warehouse, fs).items():
+        if bid < horizon:
+            fs.delete(mpath)
             removed += 1
     fs.write_text_atomic(
         horizon_path,

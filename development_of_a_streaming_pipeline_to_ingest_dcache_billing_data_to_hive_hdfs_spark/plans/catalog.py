@@ -6379,7 +6379,7 @@ def q_billing_change_feed_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the production shape: files promote, THEN the ledger commits —
         # the ledger is what lets compaction pin its _compacted_as_of
         # marker to the max committed batch
-        ledger = BatchLedger(f"{table}/_ledger.json")
+        ledger = BatchLedger.in_dir(table)
         for b in range(3):
             write_partitioned_batch(
                 events.where(F.pmod("event_id", F.lit(3)) == b), table, b

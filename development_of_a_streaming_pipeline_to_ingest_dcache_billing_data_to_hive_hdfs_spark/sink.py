@@ -19,6 +19,12 @@ Reference parity: the four INSERT-INTO-partitioned-table sinks
   FileOutputCommitter-v1 shape: data lands in a hidden staging dir,
   promotion is per-file rename (a metadata op on HDFS-like stores).
 
+This module is the only one that knows that on-disk layout: the
+ledger file, the ``batch<id>-`` data-file names (``batch_files``,
+``batch_id_column``), the ``_metrics/batch-<id>.json`` files
+(``metrics_files``) and where a table's lifecycle files are looked up
+(``find_lifecycle_file``: the table dir, then the warehouse dir).
+
 All file operations route through the ``fs`` abstraction (fs.py), so
 the exactly-once protocol runs unchanged against bare local paths AND
 ``hdfs://``/``s3a://``/``file://`` URIs — the reference's actual
@@ -35,23 +41,76 @@ import json
 import os
 import re
 import shutil
+from collections.abc import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .fs import get_filesystem
 from .schema import PARTITION_FIELD
 
 
+LEDGER_FILE = "_ledger.json"
+METRICS_DIR = "_metrics"
+# every promoted data file is named batch<id>-<part file>; compaction
+# rewrites carry no batch name
+BATCH_FILE_GLOB = "batch*"
+_BATCH_FILE = re.compile(r"^batch(\d+)-")
+# exact names only: a crashed atomic write leaves batch-<n>.json.tmp
+_METRICS_FILE = re.compile(r"batch-(\d+)\.json")
+
+
+def read_json(path: str, fs):
+    """The JSON document at ``path``, or None when the file does not
+    exist. Only a missing file means "absent": an I/O error or a
+    corrupt document propagates, because a reader that took an
+    unreadable ledger or marker for a missing one would skip a
+    lifecycle guard (a compaction marker not recorded, a snapshot read
+    not refused)."""
+    try:
+        text = fs.read_text(path)
+    except FileNotFoundError:
+        return None
+    return json.loads(text)
+
+
+def lifecycle_dirs(path: str) -> tuple[str, str]:
+    """Where the lifecycle files of the table at ``path`` (ledger,
+    snapshot horizon, compaction marker) are looked up, in precedence
+    order: the table dir, then the warehouse dir above it, whose files
+    the route tables share."""
+    table = path.rstrip("/")
+    return table, os.path.dirname(table)
+
+
+def find_lifecycle_file(path: str, name: str, fs) -> tuple[int, object] | None:
+    """``(level, document)`` of the first ``name`` file found in
+    ``lifecycle_dirs(path)`` (level 0: table-local, level 1: the shared
+    warehouse-level file), or None when neither dir has one."""
+    for level, d in enumerate(lifecycle_dirs(path)):
+        doc = read_json(os.path.join(d, name), fs)
+        if doc is not None:
+            return level, doc
+    return None
+
+
+def ledger_ids(directory: str, fs) -> set[int]:
+    """Committed batch ids of the ledger in ``directory`` (empty when
+    there is none)."""
+    return set(read_json(os.path.join(directory, LEDGER_FILE), fs) or ())
+
+
 class BatchLedger:
     """Crash-safe record of committed (sink, batch_id) pairs.
 
-    The ledger is tiny (one int per committed batch), read once per
-    batch, written via create-temp + rename. On HDFS-like stores the
-    overwrite rename is delete-then-rename — a crash in that window
-    leaves NO ledger, which replays every batch; the name-scoped batch
-    files (write_partitioned_batch) make that replay duplicate-free, so
-    the window is safe.
+    The ledger is a JSON list of every committed id. ``is_committed``
+    reads it at the start of a batch and ``commit`` reads it again and
+    rewrites it via create-temp + rename, so it is read twice and
+    written once per batch. On HDFS-like stores the overwrite rename is
+    delete-then-rename — a crash in that window leaves NO ledger, which
+    replays every batch; the name-scoped batch files
+    (write_partitioned_batch) make that replay duplicate-free, so the
+    window is safe. Any other read failure propagates (``read_json``).
     """
 
     def __init__(self, path: str, fs=None):
@@ -61,11 +120,13 @@ class BatchLedger:
         if parent:
             self.fs.mkdirs(parent)
 
+    @classmethod
+    def in_dir(cls, directory: str, fs=None) -> "BatchLedger":
+        """The exactly-once ledger of a warehouse or table dir."""
+        return cls(os.path.join(directory, LEDGER_FILE), fs=fs)
+
     def committed(self) -> set[int]:
-        try:
-            return set(json.loads(self.fs.read_text(self.path)))
-        except (FileNotFoundError, json.JSONDecodeError):
-            return set()
+        return set(read_json(self.path, self.fs) or ())
 
     def commit(self, batch_id: int) -> None:
         ids = self.committed()
@@ -83,8 +144,47 @@ def write_partitioned(df: DataFrame, path: str, mode: str = "append") -> None:
     df.write.mode(mode).partitionBy(PARTITION_FIELD).parquet(path)
 
 
-def _batch_prefix(batch_id: int) -> str:
-    return f"batch{batch_id}-"
+def batch_files(path: str, fs) -> Iterator[tuple[str, int | None]]:
+    """``(file path, batch id)`` of every data file promoted into the
+    partition dirs of the table at ``path``; the id is None for a file
+    without a batch name (a compaction rewrite). Only promoted
+    locations are walked: hidden staging dirs hold a batch mid-write."""
+    for d, d_is_dir in fs.list_entries(path):
+        if not d_is_dir or d.startswith(("_", ".")):
+            continue
+        pdir = os.path.join(path, d)
+        for f, f_is_dir in fs.list_entries(pdir):
+            if f_is_dir or f.startswith(("_", ".")):
+                continue
+            m = _BATCH_FILE.match(f)
+            yield os.path.join(pdir, f), (int(m.group(1)) if m else None)
+
+
+def batch_id_column() -> Column:
+    """The batch id embedded in the name of each row's data file,
+    derived JVM-side from ``input_file_name()`` (one regexp per row in
+    the scan stage; NULL-free only over batch-named files)."""
+    return F.regexp_extract(
+        F.element_at(F.split(F.input_file_name(), "/"), -1),
+        _BATCH_FILE.pattern,
+        1,
+    ).cast("long")
+
+
+def metrics_path(warehouse_dir: str, batch_id: int) -> str:
+    """The per-batch metrics file of ``batch_id``."""
+    return os.path.join(warehouse_dir, METRICS_DIR, f"batch-{batch_id}.json")
+
+
+def metrics_files(warehouse_dir: str, fs) -> dict[int, str]:
+    """Batch id → path of every per-batch metrics file of a warehouse."""
+    mdir = os.path.join(warehouse_dir, METRICS_DIR)
+    out: dict[int, str] = {}
+    for name, is_dir in fs.list_entries(mdir):
+        m = _METRICS_FILE.fullmatch(name)
+        if m and not is_dir:
+            out[int(m.group(1))] = os.path.join(mdir, name)
+    return out
 
 
 def cleanup_batch_files(path: str, batch_id: int, fs=None) -> int:
@@ -100,15 +200,10 @@ def cleanup_batch_files(path: str, batch_id: int, fs=None) -> int:
     removed = 0
     if not fs.is_dir(path):
         return removed
-    prefix = _batch_prefix(batch_id)
-    for d, d_is_dir in fs.list_entries(path):
-        if not d_is_dir or d.startswith(("_", ".")):
-            continue
-        pdir = os.path.join(path, d)
-        for f, f_is_dir in fs.list_entries(pdir):
-            if not f_is_dir and f.startswith(prefix):
-                fs.delete(os.path.join(pdir, f))
-                removed += 1
+    for f, bid in batch_files(path, fs):
+        if bid == batch_id:
+            fs.delete(f)
+            removed += 1
     return removed
 
 
@@ -136,7 +231,7 @@ def write_partitioned_batch(
     cleanup_batch_files(path, batch_id, fs=fs)
     staging = os.path.join(path, f"._batch_staging_{batch_id}")
     df.write.mode("overwrite").partitionBy(partition_field).parquet(staging)
-    prefix = _batch_prefix(batch_id)
+    prefix = f"batch{batch_id}-"
     for d, d_is_dir in fs.list_entries(staging):
         if not d_is_dir:
             continue  # _SUCCESS and friends

@@ -14,6 +14,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sink import (
+    BATCH_FILE_GLOB,
+    LEDGER_FILE,
+    batch_files,
+    batch_id_column,
+    find_lifecycle_file,
+)
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -46,22 +54,13 @@ def snapshot_horizon(path: str, fs=None) -> int:
     ``compact.expire_snapshots`` (0 = never expired). Checked at the
     table dir and one level up (route tables share warehouse-level
     lifecycle files, exactly like the ledger)."""
-    import json
-
     from ..compact import SNAPSHOT_HORIZON_FILE
     from ..fs import get_filesystem
 
-    fs = fs or get_filesystem(path)
-    candidates = [
-        os.path.join(path, SNAPSHOT_HORIZON_FILE),
-        os.path.join(os.path.dirname(path.rstrip("/")), SNAPSHOT_HORIZON_FILE),
-    ]
-    for hp in candidates:
-        try:
-            return int(json.loads(fs.read_text(hp))["horizon"])
-        except Exception:
-            continue
-    return 0
+    found = find_lifecycle_file(
+        path, SNAPSHOT_HORIZON_FILE, fs or get_filesystem(path)
+    )
+    return 0 if found is None else int(found[1]["horizon"])
 
 
 def compacted_as_of(path: str, fs=None) -> int:
@@ -79,49 +78,40 @@ def compacted_as_of(path: str, fs=None) -> int:
     (pre-round-7 format) is honored for every table — the conservative
     direction (refuses some reconstructible reads, never serves a
     wrong one) until the next compaction migrates the file."""
-    import json
-
     from ..compact import COMPACTED_AS_OF_FILE
     from ..fs import get_filesystem
 
-    fs = fs or get_filesystem(path)
-    table = os.path.basename(path.rstrip("/"))
-    try:
-        doc = json.loads(
-            fs.read_text(os.path.join(path, COMPACTED_AS_OF_FILE))
-        )
-        return int(doc["compacted_as_of"])
-    except Exception:
-        pass
-    try:
-        doc = json.loads(
-            fs.read_text(
-                os.path.join(
-                    os.path.dirname(path.rstrip("/")), COMPACTED_AS_OF_FILE
-                )
-            )
-        )
-        if "tables" in doc:
-            # A legacy flat warehouse-scope value may coexist with the
-            # per-table map (mixed-era warehouse: some tables compacted
-            # pre-migration). The flat value is the floor for EVERY
-            # table — conservative for never-since-compacted siblings.
-            return max(
-                int(doc["tables"].get(table, {}).get("compacted_as_of", -1)),
-                int(doc.get("compacted_as_of", -1)),
-            )
-        return int(doc["compacted_as_of"])  # legacy flat format
-    except Exception:
+    found = find_lifecycle_file(
+        path, COMPACTED_AS_OF_FILE, fs or get_filesystem(path)
+    )
+    if found is None:
         return -1
+    level, doc = found
+    if level == 0 or "tables" not in doc:
+        return int(doc["compacted_as_of"])  # table-local or legacy flat
+    # A legacy flat warehouse-scope value may coexist with the
+    # per-table map (mixed-era warehouse: some tables compacted
+    # pre-migration). The flat value is the floor for EVERY
+    # table — conservative for never-since-compacted siblings.
+    table = os.path.basename(path.rstrip("/"))
+    return max(
+        int(doc["tables"].get(table, {}).get("compacted_as_of", -1)),
+        int(doc.get("compacted_as_of", -1)),
+    )
 
 
 def table_snapshots(path: str, fs=None) -> list[int]:
     """Committed batch ids of a warehouse route table (its ledger's
     content) that are still READABLE ``as_of`` points — ids below an
     operator-set snapshot horizon (compact.expire_snapshots) are
-    excluded, because their history was collapsed by compaction."""
-    import json
+    excluded, because their history was collapsed by compaction.
 
+    Route tables share the warehouse-level ledger one dir up; a
+    table-local ledger takes precedence. Such a ledger is written by a
+    caller that commits batches for one table on its own (the
+    change-feed check in ``plans/catalog.py`` is one).
+    ``UpsertStreamWriter`` keeps its ids in a separate upsert ledger,
+    which is not read here."""
     from ..fs import get_filesystem
 
     fs = fs or get_filesystem(path)
@@ -129,19 +119,9 @@ def table_snapshots(path: str, fs=None) -> list[int]:
     # boundary past the horizon without touching it — advertise only
     # snapshots that are actually faithful
     horizon = max(snapshot_horizon(path, fs=fs), compacted_as_of(path, fs=fs))
-    # route tables share the warehouse-level ledger one dir up; a
-    # table-local ledger (UpsertStreamWriter's) takes precedence
-    candidates = [
-        os.path.join(path, "_ledger.json"),
-        os.path.join(os.path.dirname(path.rstrip("/")), "_ledger.json"),
-    ]
-    for ledger in candidates:
-        try:
-            ids = sorted(json.loads(fs.read_text(ledger)))
-        except Exception:
-            continue
-        return [i for i in ids if i >= horizon]
-    return []
+    found = find_lifecycle_file(path, LEDGER_FILE, fs)
+    ids = sorted(found[1]) if found else []
+    return [i for i in ids if i >= horizon]
 
 
 def read_table_as_of(
@@ -176,8 +156,6 @@ def read_table_as_of(
     - no horizon recorded (H=0) but compacted files present — the
       legacy incidental case: loud failure, same ``allow_compacted``
       opt-in."""
-    import re
-
     from ..fs import get_filesystem
 
     fs = fs or get_filesystem(path, spark)
@@ -204,21 +182,13 @@ def read_table_as_of(
             "expire_snapshots after compacting to make this lifecycle "
             "explicit). Pass allow_compacted=True for a best-effort read."
         )
-    pat = re.compile(r"^batch(\d+)-")
     keep: list[str] = []
     compacted: list[str] = []
-    for d, d_is_dir in fs.list_entries(path):
-        if not d_is_dir or d.startswith(("_", ".")):
-            continue
-        pdir = os.path.join(path, d)
-        for f_name, f_is_dir in fs.list_entries(pdir):
-            if f_is_dir or f_name.startswith(("_", ".")):
-                continue
-            m = pat.match(f_name)
-            if m is None:
-                compacted.append(os.path.join(pdir, f_name))
-            elif int(m.group(1)) <= batch_id:
-                keep.append(os.path.join(pdir, f_name))
+    for f, bid in batch_files(path, fs):
+        if bid is None:
+            compacted.append(f)
+        elif bid <= batch_id:
+            keep.append(f)
     if compacted and not allow_compacted and horizon == 0 and cao < 0:
         raise ValueError(
             f"read_table_as_of: {len(compacted)} file(s) under {path} have "
@@ -293,23 +263,15 @@ def read_table_changes(
             "through it. Re-baseline the consumer with read_table_as_of "
             f"at batch {cao}, then stream changes from there."
         )
-    import re
-
-    pat = re.compile(r"^batch(\d+)-")
-    keep: list[str] = []
-    for d, d_is_dir in fs.list_entries(path):
-        if not d_is_dir or d.startswith(("_", ".")):
-            continue
-        pdir = os.path.join(path, d)
-        for f_name, f_is_dir in fs.list_entries(pdir):
-            if f_is_dir or f_name.startswith(("_", ".")):
-                continue
-            m = pat.match(f_name)
-            if m is None:
-                continue  # compacted = pre-horizon state, never an increment
-            b = int(m.group(1))
-            if b > since_batch and (until_batch is None or b <= until_batch):
-                keep.append(os.path.join(pdir, f_name))
+    # a compacted file (no batch id) is pre-horizon state, never an
+    # increment
+    keep = [
+        f
+        for f, b in batch_files(path, fs)
+        if b is not None
+        and b > since_batch
+        and (until_batch is None or b <= until_batch)
+    ]
     if not keep:
         return (
             spark.read.parquet(path)
@@ -319,14 +281,7 @@ def read_table_changes(
     return (
         spark.read.option("basePath", path)
         .parquet(*keep)
-        .withColumn(
-            "_batch_id",
-            F.regexp_extract(
-                F.element_at(F.split(F.input_file_name(), "/"), -1),
-                r"^batch(\d+)-",
-                1,
-            ).cast("long"),
-        )
+        .withColumn("_batch_id", batch_id_column())
     )
 
 
@@ -357,19 +312,12 @@ def stream_table_changes(
         schema = spark.read.parquet(path).schema
     reader = (
         spark.readStream.schema(schema)
-        .option("pathGlobFilter", "batch*")
+        .option("pathGlobFilter", BATCH_FILE_GLOB)
         .option("basePath", path)
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(path).withColumn(
-        "_batch_id",
-        F.regexp_extract(
-            F.element_at(F.split(F.input_file_name(), "/"), -1),
-            r"^batch(\d+)-",
-            1,
-        ).cast("long"),
-    )
+    return reader.parquet(path).withColumn("_batch_id", batch_id_column())
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:

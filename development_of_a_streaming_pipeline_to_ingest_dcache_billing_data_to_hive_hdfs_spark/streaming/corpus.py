@@ -95,9 +95,7 @@ class CorpusIngestPipeline:
         self.gate = gate
         spark = source.sparkSession if source is not None else None
         self.fs = get_filesystem(corpus_dir, spark)
-        self.ledger = BatchLedger(
-            os.path.join(corpus_dir, "_ledger.json"), fs=self.fs
-        )
+        self.ledger = BatchLedger.in_dir(corpus_dir, fs=self.fs)
         self._store_table = store_table
         self._store_buckets = store_buckets
         self._near_store_table = near_store_table

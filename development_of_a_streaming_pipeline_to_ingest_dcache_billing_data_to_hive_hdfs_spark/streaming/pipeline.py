@@ -40,7 +40,12 @@ from ..fs import get_filesystem
 from ..parse import parse_billing
 from ..route import route
 from ..schema import REJECTS_ROUTE
-from ..sink import BatchLedger, write_partitioned_batch
+from ..sink import (
+    BatchLedger,
+    metrics_files,
+    metrics_path,
+    write_partitioned_batch,
+)
 
 ROUTES = ("transfers", "requests", "storage", "removes", REJECTS_ROUTE)
 
@@ -107,9 +112,7 @@ class BillingPipeline:
         self.fs = get_filesystem(
             warehouse_dir, source.sparkSession if source is not None else None
         )
-        self.ledger = BatchLedger(
-            os.path.join(warehouse_dir, "_ledger.json"), fs=self.fs
-        )
+        self.ledger = BatchLedger.in_dir(warehouse_dir, fs=self.fs)
 
     def table_path(self, name: str) -> str:
         return os.path.join(self.warehouse, name)
@@ -162,9 +165,6 @@ class BillingPipeline:
 
     # ---- per-batch metrics ------------------------------------------
 
-    def _metrics_dir(self) -> str:
-        return os.path.join(self.warehouse, "_metrics")
-
     def _write_metrics(self, batch_id: int, route_rows: dict[str, int]) -> None:
         """One JSON file per committed batch (atomic write; a replayed
         batch overwrites its own file, so metrics stay exactly-once with
@@ -176,30 +176,16 @@ class BillingPipeline:
             "total_rows": sum(route_rows.values()),
             "written_at": dt.datetime.now(dt.timezone.utc).isoformat(),
         }
-        self.fs.mkdirs(self._metrics_dir())
-        self.fs.write_text_atomic(
-            os.path.join(self._metrics_dir(), f"batch-{batch_id}.json"),
-            json.dumps(payload, sort_keys=True),
-        )
+        path = metrics_path(self.warehouse, batch_id)
+        self.fs.mkdirs(os.path.dirname(path))
+        self.fs.write_text_atomic(path, json.dumps(payload, sort_keys=True))
 
     def metrics(self) -> list[dict]:
         """All committed batches' metrics, ordered by batch id — the
         feed-health surface (a dead feed shows zero-row batches here
         instead of silence)."""
-        import re as _re
-
-        out = []
-        for name, is_dir in self.fs.list_entries(self._metrics_dir()):
-            # exact batch-<n>.json only: a crashed atomic write leaves
-            # batch-<n>.json.tmp beside the real files
-            if is_dir or not _re.fullmatch(r"batch-\d+\.json", name):
-                continue
-            out.append(
-                json.loads(
-                    self.fs.read_text(os.path.join(self._metrics_dir(), name))
-                )
-            )
-        return sorted(out, key=lambda m: m["batch_id"])
+        files = metrics_files(self.warehouse, self.fs)
+        return [json.loads(self.fs.read_text(files[b])) for b in sorted(files)]
 
     def run_available_now(self, checkpoint_dir: str) -> None:
         drain_available_now(self.source, self.process_batch, checkpoint_dir)

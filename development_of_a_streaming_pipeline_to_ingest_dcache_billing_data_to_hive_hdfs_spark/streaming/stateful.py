@@ -32,70 +32,6 @@ def _update(
     )
 
 
-def first_seen_dedup(
-    df: DataFrame, key_cols: list[str], ttl_ms: int | None = None
-) -> DataFrame:
-    """Streaming first-seen dedup via ``transformWithStateInPandas``
-    (the Spark 4.x arbitrary-state API, successor to
-    ``applyInPandasWithState``): the first row per key passes, every
-    later duplicate — in the same batch or any later one — is dropped.
-
-    State is one boolean per key, O(#distinct keys) in the state store.
-    ``ttl_ms`` bounds that growth for unbounded key spaces (an event-id
-    dedup at 100 TB/day cannot keep every id forever): after the TTL a
-    re-arriving key passes again, i.e. the exactly-once window equals
-    the TTL — the standard trade-off, made explicit here.
-
-    The reference has no dedup at all despite at-least-once sink
-    semantics (SURVEY §3.4); this operator is the streaming half of the
-    fix (the batch half is the ledger-idempotent sink in pipeline.py).
-    For plain key-dedup without custom logic, the built-ins
-    ``dropDuplicates(keys)`` / ``dropDuplicatesWithinWatermark`` do the
-    same job with no Python worker at all — this operator is the shape
-    to extend when the per-key decision needs real code (e.g. keep the
-    *largest* record per key, or emit a tombstone on conflict).
-
-    Requires the ``protobuf`` Python package (the transformWithState
-    driver worker speaks protobuf to the JVM); raises ImportError with
-    a clear message where it is unavailable.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:  # pragma: no cover - env-dependent
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package "
-            "(pip install protobuf); use dropDuplicates / "
-            "dropDuplicatesWithinWatermark for plain streaming dedup"
-        ) from e
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    out_schema = df.select(*df.columns).schema
-
-    class _FirstSeen(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState("seen", "seen boolean", ttl_ms)
-
-        def handleInputRows(self, key, rows, timer_values):
-            first = None
-            for pdf in rows:
-                if first is None and len(pdf) > 0:
-                    first = pdf.iloc[:1]
-                # drain the iterator either way (API contract)
-            if not self._seen.exists() and first is not None:
-                self._seen.update((True,))
-                yield first
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(*key_cols).transformWithStateInPandas(
-        _FirstSeen(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="ProcessingTime",
-    )
-
-
 def running_totals_per_type(parsed: DataFrame) -> DataFrame:
     """Streaming per-msgType running totals. Input: parsed billing frame
     (streaming); output: one updated row per key per batch."""

@@ -211,11 +211,10 @@ def warehouse_summary(spark: SparkSession, warehouse_dir: str) -> dict:
     to the summary."""
     import json as _json
     import os as _os
-    import re as _re
 
     from .compact import list_partitions, table_stats
     from .fs import get_filesystem
-    from .sink import BatchLedger
+    from .sink import ledger_ids, metrics_files
 
     fs = get_filesystem(warehouse_dir, spark)
     out: dict = {"tables": {}, "batches_committed": 0, "last_batch": None}
@@ -255,29 +254,18 @@ def warehouse_summary(spark: SparkSession, warehouse_dir: str) -> dict:
             "oldest_partition": dated[0] if dated else None,
             "newest_partition": dated[-1] if dated else None,
         }
-    # ledger via BatchLedger: same corrupt-file tolerance as the
-    # pipeline itself (a truncated ledger must not crash the health
-    # surface an operator reads while diagnosing a crash)
-    out["batches_committed"] = len(
-        BatchLedger(
-            _os.path.join(warehouse_dir, "_ledger.json"), fs=fs
-        ).committed()
-    )
+    # a truncated ledger must not crash the health surface an operator
+    # reads while diagnosing a crash: it reports 0 committed batches
+    try:
+        out["batches_committed"] = len(ledger_ids(warehouse_dir, fs))
+    except _json.JSONDecodeError:
+        pass
     # last batch by NUMERIC id — a lexicographic name sort reports
-    # batch-9 forever once batch-10 exists — and only exact
-    # batch-<n>.json names (a crashed atomic write leaves
-    # batch-<n>.json.tmp, which must not win)
-    mdir = _os.path.join(warehouse_dir, "_metrics")
-    ids = [
-        int(m.group(1))
-        for n, d in fs.list_entries(mdir)
-        if not d and (m := _re.fullmatch(r"batch-(\d+)\.json", n))
-    ]
-    if ids:
+    # batch-9 forever once batch-10 exists
+    metrics = metrics_files(warehouse_dir, fs)
+    if metrics:
         try:
-            out["last_batch"] = _json.loads(
-                fs.read_text(_os.path.join(mdir, f"batch-{max(ids)}.json"))
-            )
+            out["last_batch"] = _json.loads(fs.read_text(metrics[max(metrics)]))
         except (FileNotFoundError, _json.JSONDecodeError):
             pass
     return out
@@ -292,44 +280,32 @@ def audit_orphan_batches(warehouse_dir: str, fs=None) -> dict[str, dict[int, int
 
     Returns {table: {batch_id: n_files}} for uncommitted ids. Pure FS
     metadata (name-scoped batch files + the tiny ledger) — no data
-    read at any scale. Committed ids come from the warehouse-level
-    ledger AND any table-local ledger (the streaming upsert sink keeps
-    its own), matching read-path precedence. Files without a batch
-    prefix (compaction rewrites) are never flagged — compaction
-    deliberately collapses batch history."""
+    read at any scale. Committed ids are the union of the
+    warehouse-level ledger and any table-local ledger (written by a
+    caller that commits one table's batches itself, such as the
+    change-feed check in ``plans/catalog.py``), so no id either ledger
+    committed is ever flagged; an unreadable ledger raises instead of
+    counting as empty. ``UpsertStreamWriter``'s separate upsert ledger
+    is not consulted: its merges write no batch-named files. Files
+    without a batch prefix (compaction rewrites) are never flagged —
+    compaction deliberately collapses batch history."""
     import os as _os
-    import re as _re
 
     from .fs import get_filesystem
-    from .sink import BatchLedger
+    from .sink import batch_files, ledger_ids
 
     fs = fs or get_filesystem(warehouse_dir)
-    wh_committed = BatchLedger(
-        _os.path.join(warehouse_dir, "_ledger.json"), fs=fs
-    ).committed()
+    wh_committed = ledger_ids(warehouse_dir, fs)
     out: dict[str, dict[int, int]] = {}
     for table, is_dir in fs.list_entries(warehouse_dir):
         if not is_dir or table.startswith(("_", ".")):
             continue
         tdir = _os.path.join(warehouse_dir, table)
-        committed = set(wh_committed)
-        local_ledger = _os.path.join(tdir, "_ledger.json")
-        if fs.exists(local_ledger):
-            committed |= BatchLedger(local_ledger, fs=fs).committed()
-        # walk promoted locations only (partition dirs) — a recursive
-        # listing would also surface files inside hidden staging dirs,
-        # which belong to a batch mid-write, not to an orphan
+        committed = wh_committed | ledger_ids(tdir, fs)
         orphans: dict[int, int] = {}
-        for d, d_is_dir in fs.list_entries(tdir):
-            if not d_is_dir or d.startswith(("_", ".")):
-                continue
-            for f, f_is_dir in fs.list_entries(_os.path.join(tdir, d)):
-                if f_is_dir:
-                    continue
-                m = _re.match(r"batch(\d+)-", f)
-                if m and int(m.group(1)) not in committed:
-                    bid = int(m.group(1))
-                    orphans[bid] = orphans.get(bid, 0) + 1
+        for _f, bid in batch_files(tdir, fs):
+            if bid is not None and bid not in committed:
+                orphans[bid] = orphans.get(bid, 0) + 1
         if orphans:
             out[table] = dict(sorted(orphans.items()))
     return out

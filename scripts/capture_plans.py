@@ -1,11 +1,12 @@
 """Capture .explain("formatted") for every bench query into
-plans/r17/<query>_<tag>.txt — the optimization round's before/after
-plan evidence (r17 deliverable). Usage:
+plans/<round>/<query>_<tag>.txt — an optimization round's before/after
+plan evidence. Usage:
 
-    python scripts/capture_plans_r17.py before [query ...]
-    python scripts/capture_plans_r17.py after  [query ...]
+    python scripts/capture_plans.py r17 before [query ...]
+    python scripts/capture_plans.py r17 after  [query ...]
 
-With no query names, captures the full BENCH_QUERIES set.
+With no query names, captures the full BENCH_QUERIES set over the
+sf0.1 testdata beside the checkout.
 """
 
 from __future__ import annotations
@@ -23,15 +24,17 @@ from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_h
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or BENCH_QUERIES
-    out_dir = REPO / "plans" / "r17"
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        sys.exit(__doc__)
+    round_name, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or BENCH_QUERIES
+    out_dir = REPO / "plans" / round_name
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = get_spark_session(
         app_name=f"plan-capture-{tag}", master="local[8]",
         shuffle_partitions=8,
     )
-    sf = "/root/testdata/sf0.1"
+    sf = str(REPO.parent / "testdata" / "sf0.1")
     for name in names:
         try:
             df = ALL_QUERIES[name](spark, sf)

@@ -85,6 +85,25 @@ def test_ledger_on_hadoop_fs(spark, tmp_path):
     assert BatchLedger(path, fs=HadoopFS(spark)).committed() == {3, 7}
 
 
+def test_corrupt_ledger_is_not_read_as_empty(tmp_path):
+    """Only a missing ledger reads as "nothing committed". Read as
+    empty, a corrupt one would be rewritten by the next commit with a
+    single id, and audit_orphan_batches would then flag every earlier
+    committed batch's files for deletion."""
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.warehouse import (
+        audit_orphan_batches,
+    )
+
+    pdir = tmp_path / "wh" / "t" / "partition_date=2024-03-01"
+    pdir.mkdir(parents=True)
+    (pdir / "batch0-part-0.parquet").write_text("")
+    (tmp_path / "wh" / "_ledger.json").write_text("[0, 1")
+    with pytest.raises(ValueError):
+        BatchLedger.in_dir(str(tmp_path / "wh")).committed()
+    with pytest.raises(ValueError):
+        audit_orphan_batches(str(tmp_path / "wh"))
+
+
 def _events(spark, n=40):
     return spark.range(n).select(
         F.col("id").alias("event_id"),

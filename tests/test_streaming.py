@@ -814,6 +814,59 @@ def test_recompaction_without_expiry_cannot_silently_lie(spark, tmp_path):
     assert read_table_as_of(spark, t, 2, allow_compacted=True).count() == 4
 
 
+def test_unreadable_ledger_fails_compaction_and_expiry(spark, tmp_path):
+    """Only a MISSING ledger means "no ledger here". An unreadable one
+    must fail the compaction's marker step and expire_snapshots'
+    max-committed guard instead of skipping them: a silently skipped
+    marker left _compacted_as_of at 1 while batches 2-3 were folded into
+    the compacted files, and read_table_as_of(t, 2) then served batch
+    3's row as part of the batch-2 snapshot."""
+    import pytest as _pytest
+
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.compact import (
+        compact_table,
+        expire_snapshots,
+    )
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.fs import (
+        LocalFS,
+    )
+    from development_of_a_streaming_pipeline_to_ingest_dcache_billing_data_to_hive_hdfs_spark.sources.tables import (
+        compacted_as_of,
+        read_table_as_of,
+    )
+
+    class UnreadableLedgerFS(LocalFS):
+        def read_text(self, path):
+            if os.path.basename(path) == "_ledger.json":
+                raise OSError(f"injected read failure: {path}")
+            return super().read_text(path)
+
+    warehouse = str(tmp_path / "wh")
+    pipe = BillingPipeline(source=None, warehouse_dir=warehouse)
+    t = pipe.table_path("transfers")
+    for b in range(4):
+        batch = spark.createDataFrame(
+            [(billing_record("transfer", date="2024-03-01T10:00:00.000+0000",
+                             cellName=f"pool-b{b}"),)],
+            ["value"],
+        )
+        pipe.process_batch(batch, b)
+        if b == 1:
+            compact_table(spark, t)
+    assert compacted_as_of(t) == 1
+
+    bad = UnreadableLedgerFS()
+    with _pytest.raises(OSError, match="injected"):
+        compact_table(spark, t, fs=bad)
+    with _pytest.raises(OSError, match="injected"):
+        expire_snapshots(warehouse, up_to_batch=9, fs=bad)
+
+    compact_table(spark, t)
+    assert compacted_as_of(t) == 3
+    with _pytest.raises(ValueError, match="batch 3 was committed"):
+        read_table_as_of(spark, t, 2)
+
+
 def test_compacted_as_of_is_scoped_per_table(spark, tmp_path):
     """Compacting ONE route table must not make snapshot/change-feed
     reads refuse a NEVER-compacted sibling: the sibling's batch-named
